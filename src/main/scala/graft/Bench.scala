@@ -15,17 +15,12 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
+    val spark = Graft.localBuilder()
       // the njobs ledger below reads per-group job counts from the status
       // store after the whole suite has run; the default retention (1000
       // jobs) would evict the early groups under 167 queries x reps
       .config("spark.ui.retainedJobs", "20000")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // Warmup pass at the smallest SF: JIT + codegen + classloading for
     // every plan shape, so the timed pass measures the queries rather
     // than charging one arbitrary first query with JVM warmup.

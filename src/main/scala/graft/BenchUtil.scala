@@ -1,10 +1,11 @@
 package graft
 
 /** Shared bench plumbing — ONE definition of the machine-speed canary
-  * (and the 3-decimal formatter) used by [[Bench]], `tools/BenchScaling`
-  * and the committed `bench_baseline.json`: the canary's whole purpose
-  * is CROSS-ARTIFACT comparability, so its parameters (array size, rep
-  * count, min-of-3) must never drift between the tools that record it.
+  * (and the 3-decimal formatter) used by [[Bench]], the probes in
+  * `graft.tools` and the committed `bench_baseline.json`: the canary's
+  * whole purpose is CROSS-ARTIFACT comparability, so its parameters
+  * (array size, rep count, min-of-3) must never drift between the tools
+  * that record it.
   */
 object BenchUtil {
 

@@ -25,20 +25,27 @@ object Graft {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Build a local session with the graft extensions injected and the
-    * shuffle sizing this engine is tuned for (`cores` partitions, not
-    * Spark's default 200 — right for local[n]; a cluster overrides). */
-  def session(master: String = "local[*]",
-              appName: String = "graft",
-              shufflePartitions: Option[Int] = None): SparkSession = {
-    val cores = shufflePartitions.getOrElse(Runtime.getRuntime.availableProcessors())
+  /** The local session shape every harness main shares: `local[n]` with
+    * n = `SPARK_GRAFT_CPUS` (default: every available processor), n
+    * shuffle partitions (not Spark's default 200 — right for local[n]; a
+    * cluster overrides), UTC, no UI, WARN logging. Callers add their own
+    * `.config` lines before `getOrCreate()`. */
+  def localBuilder(): SparkSession.Builder = {
+    val cores = sys.env.get("SPARK_GRAFT_CPUS").flatMap(_.toIntOption)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
     SparkSession.builder()
-      .master(master).appName(appName)
-      .config("spark.sql.extensions", "graft.exprs.GraftExtensions")
+      .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores)
       .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+      .config("spark.ui.enabled", "false")
+      .config("spark.log.level", "WARN")
   }
+
+  /** [[localBuilder]]'s session with the graft extensions injected. */
+  def session(): SparkSession =
+    localBuilder()
+      .config("spark.sql.extensions", "graft.exprs.GraftExtensions")
+      .getOrCreate()
 
   /** Register the full `graft_*` SQL function catalog (normalize/dot plus
     * the reference's scoring/parsing kernels — tokens_contain, em,

@@ -196,10 +196,11 @@ object ModelStore {
         val v = (r.getLong(0),
           if (r.isNullAt(1)) "0" else r.getDecimal(1).toBigInteger.toString)
         memoKey.foreach { k =>
-          // at cap, evict ONE arbitrary entry instead of wiping the map: a
+          // at cap, evict ONE arbitrary entry (the map's iteration head,
+          // not the least recently used) instead of wiping the map: a
           // long-lived serving JVM crossing 4096 distinct plan/file-state
-          // pairs keeps its hot keys warm instead of re-paying every
-          // fingerprint scan after a wholesale clear (round-16 ADVICE)
+          // pairs loses one memoized digest per insert rather than all of
+          // them at once; a hot key can still be the one evicted
           if (fpMemo.size >= FpMemoCap) {
             val it = fpMemo.keySet().iterator()
             if (it.hasNext) { it.next(); it.remove() }
@@ -228,8 +229,8 @@ object ModelStore {
     * on every first sight of a plan/file-state pair. Frames with no file
     * inputs (test LocalRelations, checkpointed RDDs) and lakes with
     * pathological file counts skip the memo and pay the scan as before.
-    * `SPARK_GRAFT_FP_MEMO=0` disables; [[clear]] wipes it so the bench
-    * cold column keeps pricing a true new-JVM start. */
+    * [[clear]] wipes it so the bench cold column keeps pricing a true
+    * new-JVM start. */
   private val fpMemo =
     new java.util.concurrent.ConcurrentHashMap[String, (Long, String)]()
   private val FpMemoCap = 4096
@@ -238,7 +239,6 @@ object ModelStore {
   private def fpMemoKey(df: org.apache.spark.sql.DataFrame,
                         cols: Seq[org.apache.spark.sql.Column]): Option[String] =
     try {
-      if (sys.env.get("SPARK_GRAFT_FP_MEMO").contains("0")) return None
       // only memoize when EVERY leaf of the analyzed plan is a file-source
       // relation: `inputFiles` being non-empty does not preclude extra
       // non-file leaves (LocalRelation, localCheckpoint LogicalRDDs) whose

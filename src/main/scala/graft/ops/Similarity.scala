@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.ml.clustering.KMeans
@@ -671,8 +671,8 @@ object Similarity {
     * per-(query, cell) scalar offset — precomputed on the driver and
     * carried on the broadcast probe pairs — to the same m table adds.
     *
-    * Defaults nProbe=10 / rerank=16 from the round-8
-    * [[graft.tools.RecallSweep]] (top-5, 20 queries): sf0.1 recall 0.84
+    * Defaults nProbe=10 / rerank=16 from the round-8 recall sweep
+    * (top-5, 20 queries; SURVEY.md): sf0.1 recall 0.84
     * (8/16), 0.87 (8/32), 0.92 (10/16), 0.95 (12/16); sf0.001 0.86 /
     * 0.95 / 1.00 at 8/10/12 probes with rerank=16. The code-quality A/B
     * (admission removed: nProbe=nCells vs flat plain-code PQ) shows the
@@ -1072,7 +1072,7 @@ object Similarity {
     // not just task overhead.)
     val shufN = spark.sessionState.conf.numShufflePartitions
     val loopW = math.max(shufN,
-      widthForBytes(4.0 * kw * kw * math.max(n, 1L) * 50.0))
+      LoopConf.widthForBytes(4.0 * kw * kw * math.max(n, 1L) * 50.0))
     def d2of(a: Column, b: Column): Column =
       graft.exprs.GraftFunctions.call("graft_sqdist_q", a, b)
     // score a (vid, nbr) candidate frame: two id-equi-joins fetch the
@@ -1182,7 +1182,7 @@ object Similarity {
     // AQE-off — its joins are all explicitly decided (broadcast gate,
     // width pins, degree caps), so query-stage jobs are pure overhead
     var g = checkpoint(cutKw(seeded).withColumn("isnew", lit(true)))
-    withLoopConf(spark, loopW) {
+    LoopConf.withLoopConf(spark, loopW) {
     // deterministic EARLY EXIT: when a round ends with zero NEW edges
     // surviving the cut, the next round's candidate frontier is empty by
     // construction (only new edges generate candidates), so every
@@ -1245,7 +1245,7 @@ object Similarity {
       if (round < rounds) converged = g.where(col("isnew")).isEmpty
       round += 1
     }
-    } // withAqeOff
+    } // LoopConf.withLoopConf
     val top = graft.plans.TopK.perKey(g, Seq("vid"),
       Seq(col("d2").asc, col("nbr").asc), k)
     val w = Window.partitionBy("vid").orderBy(col("d2"), col("nbr"))
@@ -1289,13 +1289,12 @@ object Similarity {
     * the insert/delete/merge base-graph resolutions publish. */
   def knnGraphAuto(emb: DataFrame, idCol: String, vecCol: String, k: Int,
                    rounds: Int = 4, iterK: Int = -1,
-                   checkpoint: DataFrame => DataFrame = _.localCheckpoint(),
                    knownCount: Long = -1L): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
     val vecs = emb.select(col(idCol).cast("long"), quantized(vecCol))
       .as[(Long, Array[Long])].persist()
-    try knnGraphAutoFromQuantized(vecs, k, rounds, iterK, checkpoint, knownCount)
+    try knnGraphAutoFromQuantized(vecs, k, rounds, iterK, knownCount)
     finally vecs.unpersist()
   }
 
@@ -1305,11 +1304,10 @@ object Similarity {
     * count instead of re-counting; -1 counts here. */
   def knnGraphAutoFromQuantized(vecs: Dataset[(Long, Array[Long])], k: Int,
                                 rounds: Int = 4, iterK: Int = -1,
-                                checkpoint: DataFrame => DataFrame = _.localCheckpoint(),
                                 knownCount: Long = -1L): DataFrame = {
     val n = if (knownCount >= 0L) knownCount else vecs.count()
     if (n <= KnnBuildCrossover) knnGraphFromQuantized(vecs, k)
-    else knnGraphApproxFromQuantized(vecs, k, rounds, iterK, checkpoint)
+    else knnGraphApproxFromQuantized(vecs, k, rounds, iterK)
   }
 
   /** MERGE two kNN-graph indexes into one index over the union corpus —
@@ -1341,9 +1339,7 @@ object Similarity {
     * cuts, fixed rounds) ⇒ fixture-oracle eligible. */
   def knnGraphMerge(graphA: DataFrame, graphB: DataFrame,
                     emb: DataFrame, idCol: String, vecCol: String, k: Int,
-                    rounds: Int = 3, iterK: Int = -1,
-                    checkpoint: DataFrame => DataFrame = _.localCheckpoint()
-                   ): DataFrame = {
+                    rounds: Int = 3, iterK: Int = -1): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
     // Federation hygiene: a shard index may be OLDER than the union
@@ -1361,7 +1357,7 @@ object Similarity {
       .select("vid", "nbr", "d2")
     val vecs = emb.select(col(idCol).cast("long"), quantized(vecCol))
       .as[(Long, Array[Long])].persist()
-    try knnGraphApproxFromQuantized(vecs, k, rounds, iterK, checkpoint,
+    try knnGraphApproxFromQuantized(vecs, k, rounds, iterK,
       warmInit = Some(warm))
     finally vecs.unpersist()
   }
@@ -1370,7 +1366,7 @@ object Similarity {
   final case class BeamBudget(beamWidth: Int, rounds: Int, entries: Int)
 
   /** Corpus size at and below which the MEASURED fixture budgets
-    * (beam 32, rounds 3, entries 64 — the BeamBudgetSweep optimum)
+    * (beam 32, rounds 3, entries 64 — the round-14 budget-sweep optimum)
     * suffice. Above it recall decays with the walk's hop radius: the
     * r15 lifecycle audit read 0.84 at n = 1.7×10⁶ on these defaults
     * where (96, 4, 256) read 1.0 (`descent_lifecycle_r15.json`). */
@@ -1396,13 +1392,20 @@ object Similarity {
     * (beam 1024, rounds 8, entries 2048 — the billion-vector regime,
     * where per-query work is still only O(beam·graphK·rounds·d)).
     * BeamBudgetRuleProbe is the two-scale recall evidence. */
-  def beamBudgetFor(n: Long): BeamBudget = {
-    val steps =
-      if (n <= BeamBudgetRefN) 0
-      else math.min(5,
-        math.ceil(math.log10(n.toDouble / BeamBudgetRefN) + 0.5).toInt)
+  def beamBudgetFor(n: Long): BeamBudget = beamBudgetAt(beamStepsFor(n))
+
+  /** The rule's step count at corpus size `n`: 0 at and below
+    * [[BeamBudgetRefN]], else the decades above it rounded up from the
+    * half-decade point, capped at 5. */
+  def beamStepsFor(n: Long): Int =
+    if (n <= BeamBudgetRefN) 0
+    else math.min(5,
+      math.ceil(math.log10(n.toDouble / BeamBudgetRefN) + 0.5).toInt)
+
+  /** The budget at rule step `steps`: beam and entry scan double per
+    * step from (32, 64), rounds grow by one from 3. */
+  def beamBudgetAt(steps: Int): BeamBudget =
     BeamBudget(32 << steps, 3 + steps, 64 << steps)
-  }
 
   /** Resolve a caller's (beamWidth, rounds, entries) against the rule:
     * -1 (the serving entry points' default) means "from [[beamBudgetFor]]
@@ -1480,8 +1483,7 @@ object Similarity {
     * is, and a landmark graph only improves entries) and degenerate to
     * measure on the replica blow-up corpus (byte-identical twins make
     * every budget read recall 1.0); unjustified while the scan layer
-    * saturates
-    * at 64 points (BeamBudgetSweep is the harness).
+    * saturates at 64 points.
     *
     * Scale shape: at 100 TB the graph is built once offline (the q157
     * scan) and this search touches it `rounds` times per query BATCH via
@@ -1528,16 +1530,14 @@ object Similarity {
   def beamSearchAnnVectors(emb: DataFrame, idCol: String, vecCol: String,
                            queries: DataFrame, qidCol: String, qvecCol: String,
                            k: Int, graphK: Int = 8, beamWidth: Int = -1,
-                           rounds: Int = -1, entries: Int = -1,
-                           checkpoint: DataFrame => DataFrame = _.localCheckpoint()
-                          ): DataFrame = {
+                           rounds: Int = -1, entries: Int = -1): DataFrame = {
     val vecs = emb.select(col(idCol).cast("long").as("node"),
       quantized(vecCol).as("nv")).persist()
     try {
       val qs = queries.select(col(qidCol).cast("long").as("qid"),
         quantized(qvecCol).as("qv"))
       beamWalk(vecs, qs, seed = None, excludeSelf = false,
-        k, graphK, beamWidth, rounds, entries, checkpoint)
+        k, graphK, beamWidth, rounds, entries, _.localCheckpoint())
     } finally vecs.unpersist()
   }
 
@@ -1555,9 +1555,7 @@ object Similarity {
                            emb: DataFrame, idCol: String, vecCol: String,
                            queryIds: Seq[Long], k: Int,
                            beamWidth: Int = -1, rounds: Int = -1,
-                           entries: Int = -1,
-                           checkpoint: DataFrame => DataFrame = _.localCheckpoint()
-                          ): DataFrame = {
+                           entries: Int = -1): DataFrame = {
     val vecs = emb.select(col(idCol).cast("long").as("node"),
       quantized(vecCol).as("nv")).persist()
     try {
@@ -1566,7 +1564,7 @@ object Similarity {
       val seed = qs.select(col("qid"), col("qv"),
         col("qid").as("node"), lit(0L).as("d2"))
       beamWalk(vecs, qs, Some(seed), excludeSelf = true,
-        k, graphK = 0, beamWidth, rounds, entries, checkpoint,
+        k, graphK = 0, beamWidth, rounds, entries, _.localCheckpoint(),
         prebuilt = Some(graph))
     } finally vecs.unpersist()
   }
@@ -1578,16 +1576,14 @@ object Similarity {
                                   emb: DataFrame, idCol: String, vecCol: String,
                                   queries: DataFrame, qidCol: String, qvecCol: String,
                                   k: Int, beamWidth: Int = -1, rounds: Int = -1,
-                                  entries: Int = -1,
-                                  checkpoint: DataFrame => DataFrame = _.localCheckpoint()
-                                 ): DataFrame = {
+                                  entries: Int = -1): DataFrame = {
     val vecs = emb.select(col(idCol).cast("long").as("node"),
       quantized(vecCol).as("nv")).persist()
     try {
       val qs = queries.select(col(qidCol).cast("long").as("qid"),
         quantized(qvecCol).as("qv"))
       beamWalk(vecs, qs, seed = None, excludeSelf = false,
-        k, graphK = 0, beamWidth, rounds, entries, checkpoint,
+        k, graphK = 0, beamWidth, rounds, entries, _.localCheckpoint(),
         prebuilt = Some(graph))
     } finally vecs.unpersist()
   }
@@ -1647,9 +1643,7 @@ object Similarity {
                      // (measured on the 500-vector worst case: delta
                      // recall 0.896 at 32×3 → 0.95+ at 48×4)
                      k: Int, beamWidth: Int = 48, rounds: Int = 4,
-                     entries: Int = 64,
-                     checkpoint: DataFrame => DataFrame = _.localCheckpoint()
-                    ): DataFrame = {
+                     entries: Int = 64): DataFrame = {
     val spark = graph.sparkSession
     import spark.implicits._
     val baseVecs = baseEmb.select(col(idCol).cast("long").as("node"),
@@ -1665,7 +1659,8 @@ object Similarity {
       val placed = beamWalk(baseVecs,
           newVecs.select(col("node").as("qid"), col("nv").as("qv")),
           seed = None, excludeSelf = false, k, graphK = 0,
-          beamWidth, rounds, entries, checkpoint, prebuilt = Some(edges))
+          beamWidth, rounds, entries, _.localCheckpoint(),
+          prebuilt = Some(edges))
         .select(col("qid").as("vid"), col("nbr"), col("d2"))
       // 2. intra-batch: the exact bounded-heap tile scan over the DELTA
       // only (the m² term every HNSW insert pays batch-locally)
@@ -1673,9 +1668,9 @@ object Similarity {
         .select(col("vid"), col("nbr"), col("d2"))
       // 3. new lists: one cut over both candidate sources (duplicates
       // carry identical exact d2, so the dedup is order-safe)
-      val newEdges = checkpoint(graft.plans.TopK.perKey(
+      val newEdges = graft.plans.TopK.perKey(
         placed.union(intra).dropDuplicates("vid", "nbr"),
-        Seq("vid"), Seq(col("d2").asc, col("nbr").asc), k))
+        Seq("vid"), Seq(col("d2").asc, col("nbr").asc), k).localCheckpoint()
       // 4. adoption: offer each accepted edge's reverse to its target;
       // re-cut ONLY the affected ≤ m·k keys (broadcast both ways — the
       // affected set is delta-sized, never corpus-sized)
@@ -1724,9 +1719,7 @@ object Similarity {
                             baseEmb: DataFrame, idCol: String, vecCol: String,
                             newEmb: DataFrame, newIdCol: String, newVecCol: String,
                             k: Int, chunks: Int, beamWidth: Int = 48,
-                            rounds: Int = 4, entries: Int = 64,
-                            checkpoint: DataFrame => DataFrame = _.localCheckpoint()
-                           ): DataFrame = {
+                            rounds: Int = 4, entries: Int = 64): DataFrame = {
     require(chunks >= 1, "chunks must be >= 1")
     var g = graph
     var corpus = baseEmb.select(col(idCol).cast("long").as("id"),
@@ -1735,8 +1728,8 @@ object Similarity {
       col(newVecCol).as("v"))
     for (c <- 0 until chunks) {
       val chunk = delta.where(pmod(xxhash64(col("id")), lit(chunks)) === c)
-      g = checkpoint(knnGraphInsert(g, corpus, "id", "v", chunk, "id", "v",
-        k, beamWidth, rounds, entries, checkpoint))
+      g = knnGraphInsert(g, corpus, "id", "v", chunk, "id", "v",
+        k, beamWidth, rounds, entries).localCheckpoint()
       corpus = corpus.union(chunk)
     }
     g.orderBy("vid", "rk")
@@ -1784,14 +1777,13 @@ object Similarity {
   def knnGraphDelete(graph: DataFrame,
                      baseEmb: DataFrame, idCol: String, vecCol: String,
                      deleteIds: Seq[Long], k: Int, repairRounds: Int = 4,
-                     repairBeam: Int = 48, repairEntries: Int = 64,
-                     checkpoint: DataFrame => DataFrame = _.localCheckpoint()
+                     repairBeam: Int = 48, repairEntries: Int = 64
                     ): DataFrame = {
     val spark = graph.sparkSession
     import spark.implicits._
     knnGraphDelete(graph, baseEmb, idCol, vecCol,
       deleteIds.toDS.toDF("did"), "did", k, repairRounds, repairBeam,
-      repairEntries, checkpoint)
+      repairEntries)
   }
 
   /** DataFrame-side delete batch (round-15 verdict item 5): the ids
@@ -1805,8 +1797,7 @@ object Similarity {
   def knnGraphDelete(graph: DataFrame,
                      baseEmb: DataFrame, idCol: String, vecCol: String,
                      deleteIds: DataFrame, delIdCol: String, k: Int,
-                     repairRounds: Int, repairBeam: Int, repairEntries: Int,
-                     checkpoint: DataFrame => DataFrame
+                     repairRounds: Int, repairBeam: Int, repairEntries: Int
                     ): DataFrame = {
     val del = deleteIds.select(col(delIdCol).cast("long").as("did"))
     val vecs = baseEmb.select(col(idCol).cast("long").as("node"),
@@ -1817,9 +1808,10 @@ object Similarity {
       val g0 = graph.select(col("vid").cast("long"), col("rk").cast("long"),
         col("nbr").cast("long"), col("d2").cast("long"))
       // 1. drop every edge touching a deleted node
-      val kept = checkpoint(g0
+      val kept = g0
         .join(broadcast(del), col("vid") === col("did"), "left_anti")
-        .join(broadcast(del), col("nbr") === col("did"), "left_anti"))
+        .join(broadcast(del), col("nbr") === col("did"), "left_anti")
+        .localCheckpoint()
       // 2. the torn lists: survivors that pointed at a deleted node
       val affected = g0
         .join(broadcast(del), col("vid") === col("did"), "left_anti")
@@ -1867,7 +1859,7 @@ object Similarity {
         col("qid").as("node"), lit(0L).as("d2"))
       val walked = beamWalk(vecs, tornQs, Some(tornSeed), excludeSelf = true,
         k, graphK = 0, beamWidth0 = repairBeam, rounds0 = repairRounds,
-        entries0 = repairEntries, checkpoint,
+        entries0 = repairEntries, _.localCheckpoint(),
         prebuilt = Some(kept.select(col("vid"), col("nbr"))))
         .select(col("qid").as("vid"), col("nbr"), col("d2"))
       val lists = graft.plans.TopK.perKey(
@@ -1885,22 +1877,6 @@ object Similarity {
       untouched.unionByName(repaired).orderBy("vid", "rk")
     } finally vecs.unpersist()
   }
-
-  /** See [[LoopConf]]: AQE off around iterative round loops whose round
-    * bodies decide every join/width/skew question explicitly — one job
-    * per round's checkpoint instead of one per exchange (measured q175:
-    * 60 jobs, wall dominated by job count, flat 8→32 cores). Corpus-scale
-    * one-off exchanges (graph symmetrization, the descent init) stay
-    * OUTSIDE the toggle: AQE's coalescing/skew handling matters there. */
-  private def withAqeOff[T](spark: SparkSession)(body: => T): T =
-    LoopConf.withAqeOff(spark)(body)
-
-  private def withLoopConf[T](spark: SparkSession, shuffleWidth: Int)
-                             (body: => T): T =
-    LoopConf.withLoopConf(spark, shuffleWidth)(body)
-
-  private def widthForBytes(bytes: Double): Int =
-    LoopConf.widthForBytes(bytes)
 
   /** Micro-unit quantization shared by the beam-search forms (q157's
     * exactness contract: integer distances ⇒ deterministic walks). */
@@ -1951,11 +1927,13 @@ object Similarity {
     // scan at or below the measured crossover (where it is both faster
     // and exact), NN-descent above — a one-shot q169-style call never
     // carries a Θ(n²) stage past the size where that was the right call.
+    // (`checkpoint` materializes the walk; a descent build always
+    // localCheckpoints its own rounds.)
     val fwd = prebuilt match {
       case Some(edges) => edges.select(col("vid"), col("nbr"))
       case None =>
         knnGraphAutoFromQuantized(vecs.as[(Long, Array[Long])], graphK,
-            checkpoint = checkpoint, knownCount = corpusN)
+            knownCount = corpusN)
           .select(col("vid"), col("nbr"))
     }
     val graph = checkpoint(fwd
@@ -1978,13 +1956,13 @@ object Similarity {
         .select(col("qid"), col("qv"), col("node"), col("d2"))
     }
     val entryScored = scoreOf(qs.crossJoin(broadcast(entry)))
-    // the walk rounds run under AQE-off (see [[withAqeOff]]): one job per
+    // the walk rounds run under AQE-off (see [[LoopConf]]): one job per
     // round's checkpoint instead of one per exchange — every in-round
     // exchange is query-batch-sized and both corpus-scale joins are
     // broadcast-hinted map-side passes, so there is nothing for AQE to
     // size-adapt at any corpus scale (measured q175: 60 → ~24 jobs)
     var ledger: DataFrame = null
-    withAqeOff(spark) {
+    LoopConf.withAqeOff(spark) {
       ledger = checkpoint(
         seed.map(entryScored.union).getOrElse(entryScored))
       for (_ <- 1 to rounds) {

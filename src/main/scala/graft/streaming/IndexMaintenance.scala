@@ -246,15 +246,14 @@ object IndexMaintenance {
     * that must not copy the corpus per batch: the resolved chain fold
     * stays a PLAN and every verb job re-pays it as a small-side
     * broadcast join over the base scan (the plan DeltaCorpusLogSpec
-    * pins; priced by im_sequence's `sequence_delta_identity` arm). It is
-    * deliberately a SEPARATE knob from `checkpoint`: the verbs' walk
-    * loops still need their per-round materializer — threading
-    * `identity` into those nests each round's plan inside the next
-    * over the unmaterialized fold, which grows the analyzed plan
-    * superlinearly in rounds (measured: driver OOM on a 3-batch
+    * pins; measured at sf0.1 over six batches: +19% wall at 2k corpus
+    * rows, +31% at 20k, against the materialized fold). The
+    * verbs' walk loops still localCheckpoint every round either way —
+    * without a per-round materializer each round's plan nests inside
+    * the next over the unmaterialized fold, which grows the analyzed
+    * plan superlinearly in rounds (measured: driver OOM on a 3-batch
     * sequence at default heap). */
   def applyBatch(batch: DataFrame, batchId: Long, stateDir: String, k: Int,
-                 checkpoint: DataFrame => DataFrame = _.localCheckpoint(),
                  keepVersions: Int = 2, compactEvery: Int = 0,
                  lease: Option[WriterLease] = None,
                  materializeFold: Boolean = true): Unit = {
@@ -269,15 +268,14 @@ object IndexMaintenance {
     // last-op window + anti-join + union), and the verbs re-evaluate
     // their corpus in every job — walk rounds, contract checks — so an
     // unmaterialized fold re-pays the window per action (measured +20-30%
-    // on a 6-batch sequence). Materialize it ONCE per batch through the
-    // caller's checkpoint mode; a base resolves to a plain parquet scan
+    // on a 6-batch sequence). Materialize it ONCE per batch (a local
+    // checkpoint); a base resolves to a plain parquet scan
     // and is left alone. Lake-scale deployments that must not
     // materialize the corpus set `materializeFold = false` and accept
     // the re-fold — there the per-scan increment is one small-side join,
-    // not a window over the base (see the parameter doc above for why
-    // that is NOT `checkpoint = identity`).
+    // not a window over the base.
     val corpus =
-      if (materializeFold && !isBase(sd, latest)) checkpoint(corpus0)
+      if (materializeFold && !isBase(sd, latest)) corpus0.localCheckpoint()
       else corpus0
     val rows = batch.select(col("op"), col("vec_id").cast("long").as("vec_id"),
       col("embedding")).localCheckpoint()
@@ -325,12 +323,12 @@ object IndexMaintenance {
       if (delIds.isEmpty) (corpus, graph)
       else (corpus.where(!col("vec_id").isin(delIds: _*)),
         graft.ops.Similarity.knnGraphDelete(graph, corpus, "vec_id",
-          "embedding", delIds, k, checkpoint = checkpoint))
+          "embedding", delIds, k))
     val (c2, g2) =
       if (inserts.isEmpty) (c1, g1)
       else (c1.unionByName(inserts),
         graft.ops.Similarity.knnGraphInsert(g1, c1, "vec_id", "embedding",
-          inserts, "vec_id", "embedding", k, checkpoint = checkpoint))
+          inserts, "vec_id", "embedding", k))
     // delta-log mode: write only this batch's rows unless the chain has
     // reached compactEvery commits since the newest base, in which case
     // fold it into a fresh full snapshot. The decision is a pure

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Two-scale recall evidence for the serve-budget-vs-n rule
@@ -36,15 +36,11 @@ object BeamBudgetRuleProbe {
       .getOrElse(24)
     val out = sys.env.getOrElse("SPARK_GRAFT_BR_OUT", "beam_budget_rule_r16.json")
     val workDir = sys.env.getOrElse("SPARK_GRAFT_LC_WORK", "/tmp/graft_lc")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val graphK = 8
     val serveK = 5
     val qids = 0L until 10L
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
+    val spark = graft.Graft.localBuilder()
       // single-JVM probe posture: DescentLifecycle's broadcast/cleaner/
       // codec notes apply verbatim (the descent's vector-fetch joins
       // broadcast here; hash-partitioned on a real cluster)
@@ -52,7 +48,6 @@ object BeamBudgetRuleProbe {
       .config("spark.cleaner.periodicGC.interval", "90s")
       .config("spark.io.compression.codec", "zstd")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     def synth(lo: Long, hi: Long): DataFrame =
       spark.range(lo, hi).toDF("vec_id")
@@ -182,11 +177,8 @@ object BeamBudgetRuleProbe {
       val prevJson =
         if (n <= graft.ops.Similarity.BeamBudgetRefN) ""
         else {
-          val steps = Seq(budget.beamWidth / 32, budget.entries / 64)
-            .map(v => (math.log(v.toDouble) / math.log(2.0)).round.toInt).max
-          val prev = graft.ops.Similarity.BeamBudget(
-            32 << math.max(0, steps - 1), 3 + math.max(0, steps - 1),
-            64 << math.max(0, steps - 1))
+          val prev = graft.ops.Similarity.beamBudgetAt(
+            graft.ops.Similarity.beamStepsFor(n) - 1)
           val (gotPrev, prevSec) = time {
             graft.ops.Similarity.beamSearchAnnOnGraph(
                 g, emb, "vec_id", "embedding", qids, serveK,

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** End-to-end lifecycle audit of the DESCENT arm above the build
@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * distinct-vector corpus above the crossover. This tool is that run:
   *
   *   - corpus: n (default 1.7×10⁶) deterministic hash-mixed uniform
-  *     vectors — BeamBudgetSweep's synthetic recipe, the structureless
+  *     vectors — the round-14 budget sweep's recipe, the structureless
   *     worst case for a graph walk (dim default 16; the claim under
   *     audit is routing + maintenance soundness, not dimensionality);
   *   - shard A = ids below n/2, shard B = the rest — each HALF is above
@@ -44,9 +44,10 @@ import org.apache.spark.sql.functions._
   *     recall each verb actually achieved at that width (the gate is on
   *     SERVED recall, which is the product the budget buys).
   *
-  * Output: one JSON artifact (default `descent_lifecycle_r15.json`),
-  * canary-bracketed, one row per verb: seconds, output edge count, and
-  * the served recall@5 over that verb's corpus.
+  * Output: one JSON artifact (`SPARK_GRAFT_LC_OUT`, default
+  * `descent_lifecycle_r16.json`), canary-bracketed, one row per verb:
+  * seconds, output edge count, and the served recall@5 over that verb's
+  * corpus. README.md lists the settings of each committed run.
   *
   * Run: {{{ sbt "runMain graft.tools.DescentLifecycle" }}}
   * Knobs: SPARK_GRAFT_LC_N (union size), SPARK_GRAFT_LC_DIM,
@@ -70,7 +71,6 @@ object DescentLifecycle {
     val verbs = sys.env.get("SPARK_GRAFT_LC_VERBS")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .getOrElse(Set("insert", "delete", "merge"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val graphK = 8
     val serveK = 5
     val qids = 0L until 10L
@@ -107,10 +107,7 @@ object DescentLifecycle {
     val arm = if (half > graft.ops.Similarity.KnnBuildCrossover) "descent"
       else "exact"
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
+    val spark = graft.Graft.localBuilder()
       // single-JVM probe: let the (id → vec) table broadcast so the
       // descent's scoring joins don't shuffle the candidate set with
       // vectors attached (see the header note; cluster shape unchanged).
@@ -130,7 +127,6 @@ object DescentLifecycle {
       // the probe's disk peak on this one-disk box
       .config("spark.io.compression.codec", "zstd")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     /** Deterministic hash-mixed uniform corpus over [lo, hi). */
     def synth(lo: Long, hi: Long): DataFrame =

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Regression-fixture generator for the seeded-deterministic sketch/ANN/ML
   * queries (the declared no-oracle set). Their semantic bounds live in the
   * recall/accuracy specs; what those bounds CANNOT see is a silent recall
@@ -24,8 +22,8 @@ import org.apache.spark.sql.SparkSession
   * order-sensitive row.)
   *
   * Run: sbt "runMain graft.tools.MakeAnnFixtures"
-  * (session shape mirrors graft.Verify so the fixture is produced by the
-  * exact plan the gate will replay).
+  * (the session is graft.Verify's, [[graft.Graft.localBuilder]], so the
+  * fixture is produced by the exact plan the gate will replay).
   */
 object MakeAnnFixtures {
   val FixtureQueries: Seq[String] = Seq(
@@ -63,14 +61,7 @@ object MakeAnnFixtures {
   val OutDir = "src/test/resources/annfix"
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Graft.localBuilder().getOrCreate()
     new java.io.File(OutDir).mkdirs()
     FixtureQueries.foreach { name =>
       val df = graft.SparkEntry.queries(name)(spark, SfDir)

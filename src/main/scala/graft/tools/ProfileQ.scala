@@ -1,33 +1,33 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
-  SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+  SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import scala.jdk.CollectionConverters._
 
-/** Job/stage profiler for one declared query — the attribution tool the
-  * round-8 verdict asked for: run `q` once (post-warmup), print every
-  * Spark job with its wall time and task count plus the driver-side GAP
-  * before it started, so a regression can be pinned to "more jobs",
-  * "slower stages", or "driver-side work between actions" instead of
-  * guessed at.
+/** Plan + job/stage profiler for declared queries, the one probe entry
+  * point: for each query named by a prefix, print its formatted physical
+  * plan, then run it `reps` times (post-warmup) and print every Spark job
+  * with its wall time and task count plus the driver-side GAP before it
+  * started, so a regression can be pinned to "more jobs", "slower
+  * stages", or "driver-side work between actions" instead of guessed at.
   *
-  * Usage: SPARK_GRAFT_SF_DIR=... runMain graft.tools.ProfileQ q81 [reps]
+  * Usage: SPARK_GRAFT_SF_DIR=... runMain graft.tools.ProfileQ q81 q126 [reps]
+  * (a numeric argument sets reps, default 2). Each query warms up once at
+  * the `sf0.001` directory next to the SF dir, when there is one, and
+  * once at the SF dir itself; that second run is the plan printed.
   */
 object ProfileQ {
   def main(args: Array[String]): Unit = {
-    val prefix = args.headOption.getOrElse("q81")
-    val reps = if (args.length > 1) args(1).toInt else 2
+    val (repArgs, prefixArgs) =
+      args.partition(a => a.nonEmpty && a.forall(_.isDigit))
+    val prefixes = if (prefixArgs.isEmpty) Seq("q81") else prefixArgs.toSeq
+    val reps = repArgs.headOption.map(_.toInt).getOrElse(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val (name, fn) = graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .find(_._1.startsWith(prefix))
-      .getOrElse(sys.error(s"no query with prefix $prefix"))
+    val warmDir = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001")
+    val spark = graft.Graft.localBuilder().getOrCreate()
+    val catalog = graft.SparkEntry.queries.toSeq.sortBy(_._1)
+    val queries = prefixes.map(p => catalog.find(_._1.startsWith(p))
+      .getOrElse(sys.error(s"no query with prefix $p")))
 
     case class Job(id: Int, start: Long, site: String,
                    var end: Long = 0L, var tasks: Int = 0)
@@ -43,7 +43,7 @@ object ProfileQ {
       override def onJobEnd(je: SparkListenerJobEnd): Unit = {
         val j = jobs.get(je.jobId); if (j != null) j.end = je.time
       }
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
         val ti = te.taskInfo; val tm = te.taskMetrics
         val dur = (ti.finishTime - ti.launchTime) / 1e3
         if (dur > 1.0 && tm != null)
@@ -62,51 +62,47 @@ object ProfileQ {
           println(f"  STAGE ${si.stageId}%4d dur=$dur%7.3f tasks=${si.numTasks} ${si.name.take(110)}")
       }
     }
-    // warmup (JIT + model caches), not profiled
-    fn(spark, "/root/testdata/sf0.001").count()
-    fn(spark, sfDir).count()
-    spark.sparkContext.addSparkListener(listener)
-    import scala.jdk.CollectionConverters._
     def gcMillis: Long = java.lang.management.ManagementFactory
       .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
-    def canary(): Double = { // same single-thread sort probe as Bench
-      val n = 8 << 20
-      val a = new Array[Long](n)
-      var x = 0x9e3779b97f4a7c15L
-      var i = 0
-      while (i < n) { x ^= x << 13; x ^= x >>> 7; x ^= x << 17; a(i) = x; i += 1 }
-      val t0 = System.nanoTime()
-      java.util.Arrays.sort(a)
-      (System.nanoTime() - t0) / 1e9
-    }
-    for (r <- 1 to reps) {
-      jobs.clear(); stageToJob.clear()
-      val gc0 = gcMillis
-      val can0 = canary()
-      val t0 = System.currentTimeMillis()
-      val n = fn(spark, sfDir).count()
-      val dt = (System.currentTimeMillis() - t0) / 1e3
-      val ccache = java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
-        .filter(_.getName.contains("CodeHeap")).map(p =>
-          f"${p.getName.replace("CodeHeap '", "").replace("'", "").replace(" ", "")}=${p.getUsage.getUsed / 1024 / 1024}MB/${p.getUsage.getMax / 1024 / 1024}MB")
-        .mkString(" ")
-      println(f"  rep=$r gcDelta=${(gcMillis - gc0) / 1e3}%.3f canaryBefore=$can0%.3f canaryAfter=${canary()}%.3f $ccache")
-      Thread.sleep(500) // listener bus is async
-      import scala.jdk.CollectionConverters._
-      val js = jobs.values.asScala.toSeq.sortBy(_.start)
-      var prevEnd = t0
-      var jobTime = 0.0
-      println(f"PROFILE $name rep=$r rows=$n wall=$dt%.3f jobs=${js.size}")
-      js.foreach { j =>
-        val gap = (j.start - prevEnd) / 1e3
-        val dur = (j.end - j.start) / 1e3
-        jobTime += dur
-        if (dur > 0.1 || gap > 0.1)
-          println(f"  job=${j.id}%4d gapBefore=$gap%7.3f dur=$dur%7.3f tasks=${j.tasks} site=${j.site}")
-        prevEnd = math.max(prevEnd, j.end)
+
+    for ((name, fn) <- queries) {
+      println(s"==== $name ====")
+      // warmup (JIT + model caches), not profiled
+      if (warmDir.isDirectory) fn(spark, warmDir.getPath).count()
+      val warm = fn(spark, sfDir)
+      warm.explain("formatted")
+      warm.count()
+      spark.sparkContext.addSparkListener(listener)
+      for (r <- 1 to reps) {
+        jobs.clear(); stageToJob.clear()
+        val gc0 = gcMillis
+        val can0 = graft.BenchUtil.canary()
+        val t0 = System.currentTimeMillis()
+        val n = fn(spark, sfDir).count()
+        val dt = (System.currentTimeMillis() - t0) / 1e3
+        val ccache = java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
+          .filter(_.getName.contains("CodeHeap")).map(p =>
+            f"${p.getName.replace("CodeHeap '", "").replace("'", "").replace(" ", "")}=${p.getUsage.getUsed / 1024 / 1024}MB/${p.getUsage.getMax / 1024 / 1024}MB")
+          .mkString(" ")
+        println(f"  rep=$r gcDelta=${(gcMillis - gc0) / 1e3}%.3f canaryBefore=$can0%.3f " +
+          f"canaryAfter=${graft.BenchUtil.canary()}%.3f $ccache")
+        Thread.sleep(500) // listener bus is async
+        val js = jobs.values.asScala.toSeq.sortBy(_.start)
+        var prevEnd = t0
+        var jobTime = 0.0
+        println(f"PROFILE $name rep=$r rows=$n wall=$dt%.3f jobs=${js.size}")
+        js.foreach { j =>
+          val gap = (j.start - prevEnd) / 1e3
+          val dur = (j.end - j.start) / 1e3
+          jobTime += dur
+          if (dur > 0.1 || gap > 0.1)
+            println(f"  job=${j.id}%4d gapBefore=$gap%7.3f dur=$dur%7.3f tasks=${j.tasks} site=${j.site}")
+          prevEnd = math.max(prevEnd, j.end)
+        }
+        val lastEnd = if (js.nonEmpty) js.map(_.end).max else t0
+        println(f"  tailAfterLastJob=${(t0 + (dt * 1000).toLong - lastEnd) / 1e3}%.3f sumJobDur=$jobTime%.3f")
       }
-      val lastEnd = if (js.nonEmpty) js.map(_.end).max else t0
-      println(f"  tailAfterLastJob=${(t0 + (dt * 1000).toLong - lastEnd) / 1e3}%.3f sumJobDur=$jobTime%.3f")
+      spark.sparkContext.removeSparkListener(listener)
     }
     spark.stop()
   }

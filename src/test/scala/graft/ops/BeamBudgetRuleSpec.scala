@@ -57,6 +57,15 @@ class BeamBudgetRuleSpec extends AnyFunSuite {
     }
     assert(bs.last == Similarity.BeamBudget(32 << 5, 8, 64 << 5),
       "the five-decade cap bounds the budget at any n")
+    // the rule IS its step count mapped through the step budget, so a
+    // previous-step counterfactual built as beamBudgetAt(steps - 1)
+    // tracks any change to the rule's constants
+    ns.foreach { n =>
+      assert(Similarity.beamBudgetFor(n) ==
+        Similarity.beamBudgetAt(Similarity.beamStepsFor(n)), s"n=$n")
+    }
+    assert(Similarity.beamStepsFor(Similarity.BeamBudgetRefN) == 0)
+    assert(Similarity.beamStepsFor(ns.last) == 5)
   }
 
   test("serving with the auto default (-1 knobs) at gate scale is " +

@@ -153,8 +153,7 @@ class KnnGraphDeleteSpec extends AnyFunSuite {
       .select(col("vec_id").cast("long").as("vec_id"))
     val viaFrame = Similarity.knnGraphDelete(
         fullGraph, emb, "vec_id", "embedding", delFrame, "vec_id", k,
-        repairRounds = 4, repairBeam = 48, repairEntries = 64,
-        checkpoint = _.localCheckpoint()).collect()
+        repairRounds = 4, repairBeam = 48, repairEntries = 64).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(viaFrame.sorted.toSeq == deletedRows.sorted.toSeq,
       "frame overload diverged from the Seq form")

@@ -167,8 +167,8 @@ class DeltaCorpusLogSpec extends AnyFunSuite {
     assert(edges(gd) == edges(gi),
       "identity fold mode diverged the graph from the materialized mode")
     // its read-side cost shape is the pinned small-chain broadcast plan
-    // (the 'delta-fold read plan broadcasts' test above); the priced
-    // measurement lives in im_sequence's sequence_delta_identity arm
+    // (the 'delta-fold read plan broadcasts' test above); its measured
+    // price is in IndexMaintenance.applyBatch's doc
   }
 
   test("duplicate insert ids within one batch fail fast — full mode would " +
